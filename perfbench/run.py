@@ -5,8 +5,10 @@ Usage (from the repository root):
   python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>
 
 Builds graft and the benchmark from source (perfbench/build.py), runs the
-workload in one JVM at local[4] with a fixed heap, checks its outputs and
-prints every metric by name and unit. The last line of stdout is one JSON
+workload in one JVM at local[4] with a fixed heap over the inputs in
+perfbench/data, checks its outputs (training_data through the repository's
+DuckDB oracle gate, tools/check_oracle.py) and prints every metric by name
+and unit. The last line of stdout is one JSON
 object {"correct", "attempted", "failed", "metrics"} holding the
 BENCHMARK.json end-to-end metrics (--trace 0) or per-layer metrics
 (--trace 1). The exit code is non-zero when any output check failed.
@@ -25,6 +27,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import build  # noqa: E402
 
 WORKLOADS = ["ingest_trickle", "training_data"]
+DATA = "perfbench/data"
+ORACLE = "tools/check_oracle.py"
+# a reported metric named <layer>.<...> is a per-layer metric
+LAYERS = ("core.", "write.", "services.", "read.", "llm.", "spark.")
 HEAP = "2g"
 YOUNG = "768m"
 JVM_TIMEOUT_S = 170
@@ -47,6 +53,17 @@ def unit_of(name, declared):
     return ""
 
 
+def oracle_failures(results):
+    """One line per query whose result does not match its DuckDB oracle
+    SQL over the same corpus; empty when all match."""
+    p = subprocess.run([sys.executable, ORACLE, DATA, results], capture_output=True,
+                       text=True, timeout=JVM_TIMEOUT_S)
+    bad = [ln[5:] for ln in p.stdout.splitlines() if ln.startswith("FAIL ")]
+    if p.returncode != 0 and not bad:
+        bad = [f"{ORACLE} exited {p.returncode}: {(p.stderr or p.stdout)[-300:]}"]
+    return bad
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True, choices=WORKLOADS)
@@ -66,7 +83,8 @@ def main():
             "-Duser.timezone=UTC", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
            + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
            + ["-cp", cp, "graftbench.Main", "--workload", a.workload, "--seed", str(a.seed),
-              "--seconds", str(a.seconds), "--trace", str(a.trace), "--work", work, "--out", out])
+              "--seconds", str(a.seconds), "--trace", str(a.trace),
+              "--data", os.path.abspath(DATA), "--work", work, "--out", out])
     log = os.path.join(work, "jvm.log")
     t0 = time.time()
     with open(log, "w") as fh:
@@ -87,15 +105,20 @@ def main():
     failed = r.pop("failed")
     attempted = r.pop("attempted")
     if a.workload == "training_data":
-        import oracle
-        for q, why in oracle.check(work).items():
-            if why is not None:
-                failed += 1
-                errors.append(f"{q}: {why}")
+        bad = oracle_failures(os.path.join(work, "results"))
+        failed += len(bad)
+        errors += bad
     r["error_rate"] = failed / max(1, attempted)
 
     section = "per_layer" if a.trace else "end_to_end"
     declared = {m["name"]: m["unit"] for k in ("end_to_end", "per_layer") for m in spec[k]}
+    if a.trace:
+        per_layer = [m["name"] for m in spec["per_layer"]]
+        undeclared = [k for k in r if k.startswith(LAYERS) and k not in per_layer]
+        if undeclared:
+            raise SystemExit(f"run: per-layer metrics not in BENCHMARK.json: {undeclared}")
+        for n in per_layer:  # a layer this workload does not exercise
+            r.setdefault(n, 0.0)
     missing = [m["name"] for m in spec[section] if r.get(m["name"]) is None]
     if missing:
         raise SystemExit(f"run: metrics not reported: {missing}")

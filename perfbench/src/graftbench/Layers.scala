@@ -3,18 +3,19 @@ package graftbench
 /** Per-layer metrics of a traced run, measured around the benchmark's own
   * calls: op spans, the Spark jobs the listener attached to them, and
   * the counting filesystem's counts recorded at the same boundaries.
-  * Every name in [[Layers.Names]] is reported on every workload; a layer
-  * the workload does not exercise reads 0. */
+  * run.py checks the names against BENCHMARK.json and reports a declared
+  * metric the workload does not exercise as 0. */
 class Layers(tr: Trace, res: Result) {
   import Layers._
 
-  def set(name: String, v: Double): Unit = {
-    require(Names.contains(name), s"undeclared per-layer metric $name")
-    res.num(name, if (v.isNaN) 0.0 else v)
-  }
+  def set(name: String, v: Double): Unit = res.num(name, if (v.isNaN) 0.0 else v)
 
   /** Median wall time of `spans`, in ms. */
   def time(name: String, spans: Seq[Span]): Unit = set(name, Stats.median(spans.map(_.ms)))
+
+  /** Mean wall time of `spans`, in ms. */
+  def meanTime(name: String, spans: Seq[Span]): Unit =
+    set(name, if (spans.isEmpty) 0.0 else spans.map(_.ms).sum / spans.size)
 
   /** Mean of `f` over `spans`. */
   def perOp(name: String, spans: Seq[Span], f: Span => Long): Unit =
@@ -48,28 +49,6 @@ object Layers {
   val Phases: Seq[String] = Seq("index_probe", "group_plan", "stage", "publish",
     "affected_groups", "fill_targets", "unlabeled")
 
-  /** Per-layer metrics, in BENCHMARK.json order. Counts marked exact in
-    * perfbench/NOTES.md repeat exactly across same-seed traced runs. */
-  val Names: Seq[String] =
-    Seq("core.resolve_ms", "core.meta_opens_per_resolve", "core.meta_files_written_per_commit",
-      "core.meta_lists_per_commit", "core.active_instants") ++
-    Phases.map(p => s"write.${p}_ms") ++
-    Seq("write.driver_gap_ms", "write.jobs_per_commit", "write.tasks_per_commit",
-      "write.shuffle_bytes_per_commit", "write.files_created_per_commit",
-      "write.renames_per_commit", "write.bytes_written_per_user_byte",
-      "write.index_rows_read_per_input_row",
-      "services.compact_ms", "services.clean_ms", "services.archive_ms",
-      "services.bytes_rewritten_per_delta_byte", "services.files_deleted_per_clean",
-      "read.plan_ms", "read.exec_ms", "read.files_opened_per_op", "read.bytes_read_per_op",
-      "read.skip_frac", "read.rows_examined_per_row_returned", "read.lookup_file_hit_ratio",
-      "read.bloom_reads_per_lookup", "read.merge_shuffle_bytes_per_op") ++
-    TrainingData.Queries.flatMap(q => Seq(s"llm.${q}_ms", s"llm.${q}_driver_gap_ms")) ++
-    Seq("llm.shuffle_bytes", "llm.spill_bytes", "spark.gc_ms", "spark.stages_per_op",
-      "spark.jobs_per_op")
-
   /** Bytes written by an op to every kind of file. */
   def bytesWritten(s: Span): Long = FsCounts.Kinds.map(k => s.counts(s"$k.bytes_written")).sum
-
-  /** Zero-fills the metrics a workload does not exercise. */
-  def fill(res: Result): Unit = Names.foreach(n => if (res.get(n).isEmpty) res.num(n, 0.0))
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 /** Entry point for one workload run.
   *
   *   graftbench.Main --workload <name> --seed <n> --seconds <s> --trace <0|1>
-  *                   --work <dir> --out <result.json>
+  *                   --data <dir> --work <dir> --out <result.json>
   *
   * Builds a session, sets up the workload (warm-up and table builds are
   * set-up, never timed), runs its closed loop for at least `--seconds`,
@@ -32,6 +32,7 @@ object Main {
     val seed = args("seed").toLong
     val seconds = args("seconds").toDouble
     val trace = args("trace") == "1"
+    val data = args("data")
     val work = Paths.get(args("work")).toAbsolutePath
     Files.createDirectories(work)
     val jvmStartMs = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
@@ -51,8 +52,8 @@ object Main {
 
     val tr = new Trace(spark, trace)
     val w: Workload = workload match {
-      case "ingest_trickle" => new IngestTrickle(spark, tr, seed, work)
-      case "training_data"  => new TrainingData(spark, tr, seed, work)
+      case "ingest_trickle" => new IngestTrickle(spark, tr, seed, work, data)
+      case "training_data"  => new TrainingData(spark, tr, seed, work, data)
       case other            => throw new IllegalArgumentException(s"unknown workload $other")
     }
     val res = new Result
@@ -87,7 +88,6 @@ object Main {
       tr.write(work.resolve("spans.jsonl"),
         System.currentTimeMillis() * 1000000L - System.nanoTime())
       w.layers(res)
-      Layers.fill(res)
     }
     res.str("workload", workload)
     res.num("seed", seed.toDouble)

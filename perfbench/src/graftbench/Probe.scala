@@ -201,7 +201,8 @@ class Trace(val spark: org.apache.spark.sql.SparkSession, val on: Boolean) {
       jobsOf(s).foreach { j =>
         sb ++= s"""{"id":"job${j.id}","name":"${j.phase}","parent":${s.id},""" +
           s""""start_ms":${j.start},"end_ms":${j.end},"tasks":${j.tasks},""" +
-          s""""stages":${j.stages},"shuffle_write":${j.shuffleWrite}}""" + "\n"
+          s""""stages":${j.stages},"shuffle_write":${j.shuffleWrite},""" +
+          s""""input_records":${j.inputRecords}}""" + "\n"
       }
     }
     java.nio.file.Files.write(path, sb.toString.getBytes("UTF-8"))

@@ -8,11 +8,13 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** The training-data pipeline: the graft.llm bench queries, run by name
-  * through `SparkEntry.queries` over a seeded `documents` / `embeddings`
-  * corpus. Set-up writes the corpus and runs one cold pass; the timed
-  * loop repeats warm passes of the fixed sequence. The last pass's
-  * results are written out for the DuckDB oracle check in run.py. */
-class TrainingData(spark: SparkSession, tr: Trace, seed: Long, work: Path) extends Workload {
+  * through `SparkEntry.queries` over the sf0.1 `documents` / `embeddings`
+  * corpus, its rows in a seeded order. Set-up writes the corpus and runs
+  * one cold pass; the timed loop repeats warm passes of the fixed
+  * sequence. The last pass's results are written out for the DuckDB
+  * oracle check (tools/check_oracle.py) that run.py runs. */
+class TrainingData(spark: SparkSession, tr: Trace, seed: Long, work: Path, data: String)
+    extends Workload {
   import TrainingData._
   private val dataDir = work.resolve("data").toString
   private val passS = mutable.ArrayBuffer.empty[Double]
@@ -26,15 +28,15 @@ class TrainingData(spark: SparkSession, tr: Trace, seed: Long, work: Path) exten
     * build time), then one cold pass runs every query, several at a time:
     * it is warm-up, never timed per query. */
   def setup(res: Result): Seq[Double] = {
-    val docs = Gen.documents(seed, Docs)
-    val embs = Gen.embeddings(seed, Docs)
+    val tables = Seq("documents", "embeddings").map { t =>
+      val (rows, schema) = Inputs.load(spark, data, t)
+      (t, Inputs.shuffled(rows, seed), schema)
+    }
     val builds = (0 until Builds).map { _ =>
-      Workload.timeS {
-        Gen.df(spark, docs, Gen.documentsSchema).coalesce(1)
-          .write.mode("overwrite").parquet(s"$dataDir/documents.parquet")
-        Gen.df(spark, embs, Gen.embeddingsSchema).coalesce(1)
-          .write.mode("overwrite").parquet(s"$dataDir/embeddings.parquet")
-      }
+      Workload.timeS(tables.foreach { case (t, rows, schema) =>
+        Inputs.df(spark, rows, schema).coalesce(1)
+          .write.mode("overwrite").parquet(s"$dataDir/$t.parquet")
+      })
     }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(ColdThreads)
     try Queries.map(q => pool.submit(new Runnable { def run(): Unit = query(q, res, timed = false) }))
@@ -122,7 +124,6 @@ object TrainingData {
     "q27b_dedup_simhash_banded", "q28_embed_topk", "q29b_embed_neardup_bucketed",
     "q30_ann_lsh", "q123_sq8_ann", "q131_ivfpq_ann", "q139_semdedup", "q95_span_dedup",
     "q97_unigram_xent", "q138_seq_packing", "q178_unigram_train", "q194_doremi_weights")
-  val Docs = 500
   val MinPasses = 1
   val ColdThreads = 4
   val Builds = 3
